@@ -16,7 +16,9 @@ Semantics preserved exactly (reference citations):
   reduceByKey; value order within a group is unspecified, exactly like
   the reference (Go sort instability + arbitrary map-task interleaving)
 - output: per-partition key-sorted lines ``"key value"``
-  (``src/mr/worker.go:170,189``)
+  (``src/mr/worker.go:170,189``); like the reference's reduce task,
+  each reduce task applies the reducer, sorts its outputs and formats
+  the lines, so a job is ONE shuffle: a map stage and a reduce stage
 
 Spark's scheduler supplies the whole control plane the reference
 hand-rolls (coordinator/worker RPC, heartbeats, requeue — §2.1 rows
@@ -33,13 +35,30 @@ CANNOT be auto-combined: the reference's own apps count by
 ``len(values)`` (``src/mrapps/wc.go:37-40``), which is not a fold of
 its own outputs — hence the explicit declared pair, parity-pinned
 against the groupByKey path by tests/test_mr_associative.py.
+
+Cost model: every Python task pays a fixed worker-side CPU floor, whatever
+its data: 0.21-0.27 s per task for an identity map over one-element
+partitions on a 4-vCPU x86 VM (Python 3.11, Spark 4.1). PySpark's worker
+calls ``importlib.invalidate_caches()`` in ``setup_spark_files`` on every
+task, and on Python 3.11 that re-reads the central directory of every
+cached zipimporter (12 for ``pyspark.zip``, 2 each for the spark-core jar
+and py4j, plus this package's addPyFile zip): 0.20-0.30 s per call on
+the same machine. The job therefore launches as few Python tasks as it
+can: ``min(len(inputs), defaultParallelism)`` map tasks for a Python
+input (the map work of a small corpus costs less than one task's floor)
+and ``n_reduce`` reduce tasks, with the reduce, the output sort
+(``ExternalSorter`` under ``spark.python.worker.memory``, spilling like
+``repartitionAndSortWithinPartitions``) and the formatting fused into
+the reduce stage.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Sequence
+from collections.abc import Callable, Iterable
+from operator import itemgetter
 
 from pyspark import RDD, SparkContext
+from pyspark.shuffle import ExternalSorter
 from pyspark.sql import SparkSession
 
 MapF = Callable[[str, str], list[tuple[str, str]]]
@@ -66,7 +85,7 @@ def mr_run(
     spark: SparkSession,
     mapf: MapF,
     reducef: ReduceF | None,
-    inputs: Sequence[tuple[str, str]] | RDD,
+    inputs: Iterable[tuple[str, str]] | RDD,
     n_reduce: int = 10,
     combinef: CombineF | None = None,
     finalizef: FinalizeF | None = None,
@@ -74,8 +93,8 @@ def mr_run(
     """Run a MapReduce job; returns an RDD of output lines ``"key value"``,
     key-sorted within each of the ``n_reduce`` partitions.
 
-    ``inputs``: (name, contents) pairs — a Python sequence or a pair-RDD
-    (e.g. from ``sc.wholeTextFiles``).
+    ``inputs``: (name, contents) pairs — any Python iterable (read once)
+    or a pair-RDD (e.g. from ``sc.wholeTextFiles``).
 
     Declared-associative fast path (round 8): passing ``combinef``
     switches the shuffle from groupByKey to ``reduceByKey(combinef)``
@@ -94,8 +113,10 @@ def mr_run(
 
     sc: SparkContext = spark.sparkContext
     if not isinstance(inputs, RDD):
-        inputs = sc.parallelize(list(inputs),
-                                numSlices=max(1, min(len(inputs), n_reduce)))
+        records = list(inputs)
+        inputs = sc.parallelize(
+            records,
+            numSlices=max(1, min(len(records), sc.defaultParallelism)))
 
     def apply_map(rec: tuple[str, str]) -> Iterable[tuple[str, str]]:
         return mapf(rec[0], rec[1])
@@ -103,34 +124,34 @@ def mr_run(
     mapped = inputs.flatMap(apply_map)                        # map phase
 
     if combinef is not None:
-        fin = finalizef if finalizef is not None else (lambda k, v: v)
-        reduced = (
-            mapped
-            .reduceByKey(combinef, numPartitions=n_reduce,
-                         partitionFunc=ihash)         # map-side combine
-            .map(lambda kv: (kv[0], fin(kv[0], kv[1])))
-        )
+        finish = finalizef if finalizef is not None else (lambda k, v: v)
+        shuffled = mapped.reduceByKey(
+            combinef, numPartitions=n_reduce,
+            partitionFunc=ihash)                      # map-side combine
     else:
         if reducef is None:
             raise ValueError("mr_run needs reducef or combinef")
 
-        def apply_reduce(kv: tuple[str, Iterable[str]]) -> tuple[str, str]:
-            key, values = kv
-            return key, reducef(key, list(values))
+        def finish(key: str, values: Iterable[str]) -> str:
+            return reducef(key, list(values))
 
-        reduced = (
-            mapped
-            .groupByKey(numPartitions=n_reduce,
-                        partitionFunc=ihash)          # shuffle+group
-            .map(apply_reduce)                        # reduce phase
-        )
+        shuffled = mapped.groupByKey(
+            numPartitions=n_reduce, partitionFunc=ihash)  # shuffle+group
 
-    return (
-        reduced
-        .repartitionAndSortWithinPartitions(
-            numPartitions=n_reduce, partitionFunc=ihash)      # output order
-        .map(lambda kv: f"{kv[0]} {kv[1]}")                   # text lines
-    )
+    # the spill bound of repartitionAndSortWithinPartitions' own sort
+    memory = shuffled._memory_limit() * 0.9
+    serializer = shuffled._jrdd_deserializer
+
+    def reduce_partition(
+            groups: Iterable[tuple[str, Iterable[str]]]) -> Iterable[str]:
+        """Reduce phase and output order in one pass over the partition:
+        sort the reduce outputs (not the value lists) by key."""
+        outputs = ((key, finish(key, values)) for key, values in groups)
+        sort = ExternalSorter(memory, serializer).sorted
+        for key, value in sort(outputs, key=itemgetter(0)):
+            yield f"{key} {value}"
+
+    return shuffled.mapPartitions(reduce_partition)
 
 
 def collect_output(out: RDD) -> list[str]:
